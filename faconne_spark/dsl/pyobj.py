@@ -5,16 +5,26 @@ driver-side convenience. The scalable path is DataFrames end-to-end;
 ``collect_nested`` is the explicit escape hatch that materialises a
 transform result as the literal nested object the reference would
 return.
+
+Every literal takes one path: a Spark schema inferred here, then a
+``pyarrow.Table`` that ``createDataFrame`` turns into a ``LocalRelation``.
+It plans as ``LocalTableScan`` (below the 48 MB default of
+``spark.sql.execution.arrow.localRelationThreshold``), so actions on it
+start no Python workers; no session conf is read or changed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import datetime
+import decimal
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from faconne_spark.dsl.compiler import shape_of
 from faconne_spark.dsl.range_ import Shape
 from faconne_spark.errors import FaconneError
+from faconne_spark.session import get_session
 
 
 def to_df(
@@ -23,7 +33,8 @@ def to_df(
     """Convert a nested Python literal to a DataFrame.
 
     * list of dicts  → rows (the scalable shape; like JDBC resultsets in
-      the reference's motivating examples, demo.clj:45-54)
+      the reference's motivating examples, demo.clj:45-54); str-keyed
+      dicts inside rows are fixed-field records → structs
     * any other list/set → single row, one ``__root`` array column
     * dict           → single row, one ``__root`` map column
 
@@ -33,13 +44,10 @@ def to_df(
     map<·, array<·>> even though no element exists to sample — the
     reference's runtime traversal trivially yields nothing there, but a
     DataFrame needs the shape in the schema up front.
-    """
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            from faconne_spark.session import get_session
 
-            spark = get_session()
+    An explicit ``schema`` (a ``StructType`` of the rows) skips inference.
+    """
+    spark = spark or SparkSession.getActiveSession() or get_session()
     if (
         isinstance(obj, list)
         and obj
@@ -49,102 +57,89 @@ def to_df(
         # vectors of dynamic-keyed maps)
         and all(isinstance(k, str) for r in obj for k in r)
     ):
-        if schema is not None:
-            return spark.createDataFrame(obj, schema=schema)
-        # rows: nested dicts are fixed-field records → infer as structs
-        # (MapType would coerce mixed value types to string). The
-        # single-__root path below keeps dict→MapType for dynamic keys.
-        key = "spark.sql.pyspark.inferNestedDictAsStruct.enabled"
-        old = spark.conf.get(key, "false")
-        spark.conf.set(key, "true")
-        try:
-            return spark.createDataFrame(obj)
-        except Exception:
-            # native sampler chokes on empty containers → infer ourselves,
-            # letting the domain pattern type the empty branches
-            elem_pat = (
-                domain[0]
-                if isinstance(domain, list) and len(domain) == 1
-                else None
-            )
-            field_pats = {}
-            if isinstance(elem_pat, dict):
-                from faconne_spark.dsl.ast import Lit
+        rows, records = obj, True
+        pat = domain[0] if isinstance(domain, list) and len(domain) == 1 else None
+    elif isinstance(obj, (list, set, frozenset, dict)):
+        rows, records, pat = [{"__root": obj}], False, {"__root": domain}
+    else:
+        raise FaconneError(f"cannot convert {type(obj)} to DataFrame")
+    if schema is None:
+        schema = _unify(_struct_type(r, records) for r in rows)
+        schema = _concrete(_overlay(schema, pat))
+    import pyarrow as pa  # here, not at import: keeps package import light
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-                for k, v in elem_pat.items():
-                    if isinstance(k, str):
-                        field_pats[k] = v
-                    elif isinstance(k, Lit):
-                        field_pats[k.value] = v
-            cols = []
-            for r in obj:
-                for c in r:
-                    if c not in cols:
-                        cols.append(c)
-            fields = []
-            for c in cols:
-                t = _unify(_infer_type(_norm(r.get(c))) for r in obj)
-                t = _concrete(_overlay(t, field_pats.get(c)))
-                fields.append(T.StructField(c, t))
-            return spark.createDataFrame(
-                [_norm(r) for r in obj], schema=T.StructType(fields)
-            )
-        finally:
-            spark.conf.set(key, old)
-    if isinstance(obj, (list, set, frozenset, dict)):
-        data = [{"__root": _norm(obj)}]
-        if schema is None:
-            # infer ourselves: Spark's sampler fails on empty containers
-            # ([] / {}), whose element type the domain pattern supplies.
-            t = _concrete(_overlay(_infer_type(_norm(obj)), domain))
-            schema = T.StructType([T.StructField("__root", t)])
-        return spark.createDataFrame(data, schema=schema)
-    raise FaconneError(f"cannot convert {type(obj)} to DataFrame")
+    table = pa.Table.from_pylist(
+        [_to_arrow(r, schema) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
-def _infer_type(x):
+_SCALAR_TYPES = [  # bool before int, datetime before date: subclasses
+    (bool, T.BooleanType), (int, T.LongType), (float, T.DoubleType),
+    (str, T.StringType), ((bytes, bytearray), T.BinaryType),
+    (datetime.datetime, T.TimestampType), (datetime.date, T.DateType),
+    (decimal.Decimal, lambda: T.DecimalType(38, 18)),  # as Spark infers
+]
+
+
+def _infer_type(x, records: bool = False):
     """``T.NullType()`` marks positions whose type no element witnesses
     (empty containers / all-null); ``_overlay`` may fill them from the
-    domain pattern and ``_concrete`` resolves the rest."""
+    domain pattern and ``_concrete`` resolves the rest. Under
+    ``records`` non-empty str-keyed dicts are structs (MapType would
+    coerce mixed value types to string); otherwise dicts are maps."""
     if x is None:
-        return None
-    if isinstance(x, bool):
-        return T.BooleanType()
-    if isinstance(x, int):
-        return T.LongType()
-    if isinstance(x, float):
-        return T.DoubleType()
-    if isinstance(x, str):
-        return T.StringType()
-    if isinstance(x, bytes):
-        return T.BinaryType()
-    if isinstance(x, (list, tuple, set, frozenset)):
-        return T.ArrayType(_unify(_infer_type(v) for v in x) or T.NullType())
+        return T.NullType()
+    for py, spark_type in _SCALAR_TYPES:
+        if isinstance(x, py):
+            return spark_type()
+    if isinstance(x, tuple):
+        return _struct_type({f"_{i}": v for i, v in enumerate(x, 1)}, records)
+    if isinstance(x, (list, set, frozenset)):
+        return T.ArrayType(_unify(_infer_type(v, records) for v in x))
     if isinstance(x, dict):
+        if records and x and all(isinstance(k, str) for k in x):
+            return _struct_type(x, records)
         return T.MapType(
-            _unify(_infer_type(k) for k in x) or T.NullType(),
-            _unify(_infer_type(v) for v in x.values()) or T.NullType(),
+            _unify(_infer_type(k, records) for k in x),
+            _unify(_infer_type(v, records) for v in x.values()),
         )
     raise FaconneError(f"cannot infer Spark type for {type(x)}")
 
 
+def _struct_type(fields: dict, records: bool):
+    return T.StructType(
+        [T.StructField(k, _infer_type(v, records)) for k, v in fields.items()]
+    )
+
+
 def _unify(types):
-    out = None
+    out = T.NullType()
     for t in types:
-        if t is None or isinstance(t, T.NullType):
+        if isinstance(t, T.NullType) or t == out:
             continue
-        if out is None or isinstance(out, T.NullType) or out == t:
+        if isinstance(out, T.NullType):
             out = t
+        elif T.MapType(T.NullType(), T.NullType()) in (out, t) and (
+            T.StructType in (type(out), type(t))
+        ):  # an empty dict among records
+            out = out if isinstance(out, T.StructType) else t
         elif {out.__class__, t.__class__} == {T.LongType, T.DoubleType}:
             out = T.DoubleType()
         elif isinstance(out, T.ArrayType) and isinstance(t, T.ArrayType):
-            out = T.ArrayType(
-                _unify([out.elementType, t.elementType]) or T.NullType()
-            )
+            out = T.ArrayType(_unify([out.elementType, t.elementType]))
         elif isinstance(out, T.MapType) and isinstance(t, T.MapType):
             out = T.MapType(
-                _unify([out.keyType, t.keyType]) or T.NullType(),
-                _unify([out.valueType, t.valueType]) or T.NullType(),
+                _unify([out.keyType, t.keyType]),
+                _unify([out.valueType, t.valueType]),
+            )
+        elif isinstance(out, T.StructType) and isinstance(t, T.StructType):
+            merged = {}
+            for f in out.fields + t.fields:  # first-seen order, as in Spark
+                merged.setdefault(f.name, []).append(f.dataType)
+            out = T.StructType(
+                [T.StructField(k, _unify(v)) for k, v in merged.items()]
             )
         else:
             out = T.StringType()  # mixed scalars: stringly-typed fallback
@@ -159,9 +154,7 @@ def _overlay(t, pat):
     explodes type-check."""
     from faconne_spark.dsl.ast import Lit, SetOf, Var
 
-    if pat is None:
-        return t
-    unknown = t is None or isinstance(t, T.NullType)
+    unknown = isinstance(t, T.NullType)
     if isinstance(pat, SetOf):
         pat = list(pat.elems)
     if isinstance(pat, (list, tuple)) and pat:
@@ -172,42 +165,35 @@ def _overlay(t, pat):
             for p in pat:  # n-at-a-time chunk patterns share the element type
                 elem = _overlay(elem, p)
             return T.ArrayType(elem)
-        return t
-    if isinstance(pat, dict):
-        traversal = {
-            k: v
+    elif isinstance(pat, dict):
+        subs = {
+            (k.value if isinstance(k, Lit) else k): v
             for k, v in pat.items()
             if isinstance(k, (Var, Lit, str, tuple))  # not Keys/As destructure
         }
-        if not traversal:
+        if not subs:
             return t  # Keys/As destructuring: node shape comes from data
         if unknown:
             t = T.MapType(T.NullType(), T.NullType())
         if isinstance(t, T.MapType):
             vt = t.valueType
-            for _, vpat in traversal.items():
+            for vpat in subs.values():
                 vt = _overlay(vt, vpat)
             return T.MapType(t.keyType, vt)
         if isinstance(t, T.StructType):
-            fields = []
-            for f in t.fields:
-                sub = None
-                for k, vpat in traversal.items():
-                    key = k.value if isinstance(k, Lit) else k
-                    if key == f.name:
-                        sub = vpat
-                fields.append(
-                    T.StructField(f.name, _overlay(f.dataType, sub), f.nullable)
-                )
-            return T.StructType(fields)
-        return t
+            return T.StructType(
+                [
+                    T.StructField(f.name, _overlay(f.dataType, subs.get(f.name)))
+                    for f in t.fields
+                ]
+            )
     return t
 
 
 def _concrete(t, key_pos: bool = False):
     """Resolve remaining unknowns: LongType for values (any type works —
     the branch holds no data), StringType in map-key position."""
-    if t is None or isinstance(t, T.NullType):
+    if isinstance(t, T.NullType):
         return T.StringType() if key_pos else T.LongType()
     if isinstance(t, T.ArrayType):
         return T.ArrayType(_concrete(t.elementType))
@@ -225,14 +211,28 @@ def _concrete(t, key_pos: bool = False):
     return t
 
 
-def _norm(x):
-    """Sets → lists (Spark has no set literal type)."""
-    if isinstance(x, (set, frozenset)):
-        return sorted((_norm(v) for v in x), key=repr)
-    if isinstance(x, dict):
-        return {k: _norm(v) for k, v in x.items()}
-    if isinstance(x, (list, tuple)):
-        return [_norm(v) for v in x]
+def _to_arrow(x, t):
+    """``x`` as ``pa.Table.from_pylist`` takes it for Spark type ``t``;
+    naive datetimes are local time, as Spark reads Python datetimes."""
+    if x is None:
+        return None
+    if isinstance(t, T.StructType):
+        if isinstance(x, tuple):
+            x = dict(zip(t.names, x))
+        return {f.name: _to_arrow(x.get(f.name), f.dataType) for f in t.fields}
+    if isinstance(t, T.MapType):
+        return [
+            (_to_arrow(k, t.keyType), _to_arrow(v, t.valueType))
+            for k, v in x.items()
+        ]
+    if isinstance(t, T.ArrayType):
+        if isinstance(x, (set, frozenset)):
+            x = sorted(x, key=repr)
+        return [_to_arrow(v, t.elementType) for v in x]
+    if isinstance(t, T.StringType) and not isinstance(x, str):
+        return str(x)
+    if isinstance(t, T.TimestampType) and x.tzinfo is None:
+        return x.astimezone()
     return x
 
 

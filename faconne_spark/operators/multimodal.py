@@ -44,9 +44,11 @@ whatever the upstream scan chose — no shuffle is introduced.
 
 from __future__ import annotations
 
+import hashlib
 import struct
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -512,8 +514,6 @@ def _jpeg_dct_matrix():
     if _JPEG_DCT_C is None:
         import math
 
-        import numpy as np
-
         C = np.empty((8, 8))
         for u in range(8):
             cu = math.sqrt(0.5) if u == 0 else 1.0
@@ -700,8 +700,6 @@ def _jpeg_plan(
     """Shared front half of both JPEG encoders: color transform,
     chroma subsample, pad-to-MCU-grid, forward DCT, quantize.
     Returns (comp_q, hv, mcux, mcuy, qt_l, qt_c)."""
-    import numpy as np
-
     if channels not in (1, 3):
         raise ValueError(f"jpeg_encode supports grayscale/RGB, got {channels}")
     if len(pixels) != width * height * channels:
@@ -799,8 +797,6 @@ def jpeg_encode_12bit(
     example tables).  ``quant`` is a 64-length natural-order luma
     table (all-ones = the exactly-invertible gate path for flat
     blocks)."""
-    import numpy as np
-
     if len(pixels) != width * height * 2:
         raise ValueError(
             f"12-bit pixels must be {width * height * 2} bytes"
@@ -1334,8 +1330,6 @@ def jpeg_pixels(payload: bytes) -> tuple:
     RGB (channels=3), the png_pixels contract.  12-bit, arithmetic,
     hierarchical, and >2:1 sampling layouts raise toward the
     ``codec=`` seam."""
-    import numpy as np
-
     if payload[:2] != JPEG_SOI:
         raise ValueError("not a JPEG payload")
     qtables: dict = {}
@@ -1626,8 +1620,6 @@ def media_payload(doc_id: int, text: str) -> tuple:
     * doc_id % 3 == 2 → motion-BMP, 2 + d3 % 5 frames of
       (4 + d4 % 8) × (4 + d5 % 8), frame pixels rotated per index
     """
-    import hashlib
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     which = doc_id % 3
     if which == 0:
@@ -1713,8 +1705,6 @@ def synthesize_png(docs: DataFrame) -> DataFrame:
     base = spread(docs.select("doc_id", "text"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         for pdf in it:
             ids, payloads, types = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
@@ -1771,10 +1761,6 @@ def jpeg_payload_for_doc(text: str) -> bytes:
     :func:`synthesize_jpeg` and the fused resize operator — ONE
     implementation so the payload a fused pass resizes is
     byte-identical to the one the synth relation carries."""
-    import hashlib
-
-    import numpy as np
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     wb, hb = 1 + d[0] % 3, 1 + d[1] % 3
     vals = np.array(
@@ -1789,8 +1775,6 @@ def jpeg_payload_for_doc(text: str) -> bytes:
 def gif_payload_for_doc(text: str) -> bytes:
     """Per-document GIF87a builder (see :func:`synthesize_gif`);
     shared with the fused resize operator."""
-    import hashlib
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     w, h = 8 + d[0] % 24, 8 + d[1] % 24
     return gif_encode(w, h, _tile(d, w * h))
@@ -1830,10 +1814,6 @@ def jpeg_progressive_payload_for_doc(text: str) -> bytes:
     """Per-document progressive-JPEG builder (see
     :func:`synthesize_jpeg_progressive`); shared with the fused
     single-pass gate operator so both paths carry identical bytes."""
-    import hashlib
-
-    import numpy as np
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     wb, hb = 1 + d[0] % 3, 1 + d[1] % 3
     vals = np.array(
@@ -1880,10 +1860,6 @@ def synthesize_jpeg_12bit(docs: DataFrame) -> DataFrame:
     content for the extended-precision codec (the same flat-block
     trick as the 8-bit gate, at 12-bit dynamic range).  Arrow-batched
     map-only."""
-    import hashlib
-
-    import numpy as np
-
     from faconne_spark.session import spread
 
     base = spread(docs.select("doc_id", "text"))
@@ -1923,8 +1899,6 @@ def extract_jpeg12_pixel_stats(media: DataFrame) -> DataFrame:
     end-to-end decode proof for the extended-precision path: extended
     Huffman tables, 15-category DC differences, the 2048 level shift.
     Arrow-batched map-only, no shuffle."""
-    import numpy as np
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -2005,8 +1979,6 @@ def extract_png_channel_stats(media: DataFrame) -> DataFrame:
     that permutes channels (BGR/RGB swap, filter applied to the wrong
     byte offset, stride slip) leaves the grand total intact and ONLY
     this gauge catches it.  Arrow-batched map-only, no shuffle."""
-    import numpy as np
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -2097,8 +2069,6 @@ def extract_media_meta(
     decode = decoder or decode_media_real
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         for pdf in it:
             rows = []
             for doc_id, payload, mtype in zip(
@@ -2448,8 +2418,6 @@ def extract_audio_zcr(media: DataFrame) -> DataFrame:
     (s·s' < 0 — zeros join neither side, so the count is exactly
     replayable).  zcr_micro is the half-up micro share of adjacent
     pairs that flip.  Arrow-batched map-only, no shuffle."""
-    import numpy as np
-
     wav = media.filter(media.media_type == "audio/wav")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3163,8 +3131,6 @@ def synthesize_wav_segments(docs: DataFrame) -> DataFrame:
     base = spread(docs.select("doc_id", "text"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         for pdf in it:
             ids, payloads, types = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
@@ -3198,8 +3164,6 @@ def extract_wav_silence_runs(media: DataFrame) -> DataFrame:
     speech pipeline runs before transcription to drop dead air."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -3879,8 +3843,6 @@ def mp4_encode_mjpeg_fragmented(
 def _mjpeg_frames_for_doc(d: bytes, n: int, wb: int, hb: int) -> list:
     """The shared digest-rotated flat-block MJPEG frame list both MP4
     builders encode (block k of frame i valued d[(k + i) % 16])."""
-    import numpy as np
-
     ones = ([1] * 64, [1] * 64)
     frames = []
     for i in range(n):
@@ -3897,8 +3859,6 @@ def _mjpeg_frames_for_doc(d: bytes, n: int, wb: int, hb: int) -> list:
 def mp4_payload_for_doc(text: str) -> bytes:
     """Per-document MJPEG-in-MP4 builder (see :func:`synthesize_mp4`);
     shared with the fused single-pass gate operator."""
-    import hashlib
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     n = 2 + d[3] % 5
     wb, hb = 1 + d[4] % 3, 1 + d[5] % 3
@@ -3910,8 +3870,6 @@ def mp4_fragmented_payload_for_doc(text: str) -> bytes:
     """Per-document fragmented-MP4 builder (see
     :func:`synthesize_mp4_fragmented`); shared with the fused
     single-pass gate operator."""
-    import hashlib
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     n = 2 + d[7] % 6
     wb, hb = 1 + d[8] % 3, 1 + d[9] % 3
@@ -4211,8 +4169,6 @@ def flac_encode(
     at bps+1).  CRC-8 / CRC-16 exactly as the spec requires.  Every
     payload this writes decodes bit-exactly through flac_decode
     (MD5-verified)."""
-    import hashlib
-
     if len(pcm) % 2:
         raise ValueError("PCM16 payload has odd byte length")
     if nchannels not in (1, 2):
@@ -4512,8 +4468,6 @@ def flac_decode(payload: bytes):
     frame-header CRC-8, the whole-frame CRC-16, the total-samples
     count, and (for byte-aligned bit depths) the STREAMINFO MD5 of the
     re-interleaved stream — every defect fails loud."""
-    import hashlib
-
     if payload[:4] != b"fLaC":
         raise ValueError("not a FLAC payload (no fLaC marker)")
     pos = 4
@@ -4663,8 +4617,6 @@ FLAC_STATS_SCHEMA = StructType(
 def flac_payload_for_doc(text: str) -> bytes:
     """Per-document FLAC builder (see :func:`synthesize_flac`);
     shared with the fused single-pass gate operator."""
-    import hashlib
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     samples = []
     for i in range(3 + d[0] % 4):
@@ -4867,8 +4819,6 @@ def gif_animated_payload_for_doc(text: str) -> bytes:
     """Per-document animated-GIF builder (see
     :func:`synthesize_gif_animated`); shared with the fused
     single-pass gate operator."""
-    import hashlib
-
     d = hashlib.md5(text.encode("utf-8")).digest()
     dg = [b % 16 for b in d]
     n = 2 + d[6] % 6

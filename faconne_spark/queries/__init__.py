@@ -4,7 +4,9 @@ DuckDB oracle producing identical results on identical parquet."""
 
 from __future__ import annotations
 
+import collections
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,25 +24,38 @@ from pyspark.sql import functions as F
 # no results, no computed intermediates are cached, exactly like a
 # catalog table resolving its schema from the metastore instead of
 # re-reading footers per query.  Keyed on applicationId so a new
-# session never sees a stale JVM's plan.
-_T_MEMO: dict = {}
+# session never sees a stale JVM's plan.  Bounded by least-recent use
+# (many tmp dirs in one test run).
+_T_MEMO: collections.OrderedDict = collections.OrderedDict()
+_T_MEMO_MAX = 256
+_T_MEMO_LOCK = threading.Lock()
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table (events.ts normalized to µs TIMESTAMP —
     the parquet column is TIMESTAMP(NANOS), which arrives as bigint
-    nanos on Spark ≤ 4.0 + nanosAsLong and as timestamp_ntz on 4.1+)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _T_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        if name == "events":
-            from faconne_spark.streaming import ensure_event_time
+    nanos on Spark ≤ 4.0 + nanosAsLong and as timestamp_ntz on 4.1+).
 
-            df = ensure_event_time(df)
-        if len(_T_MEMO) > 256:  # bound: many tmp dirs in one test run
-            _T_MEMO.clear()
+    Assumes ``<sf_dir>/<name>.parquet`` is immutable for the life of
+    the Spark application: the first call's file listing and schema
+    are reused, so a table rewritten in place under the same path is
+    not re-listed, and reads see the old schema and may hit missing
+    files. Write a changed table to a new directory instead."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    with _T_MEMO_LOCK:
+        df = _T_MEMO.get(key)
+        if df is not None:
+            _T_MEMO.move_to_end(key)
+            return df
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events":
+        from faconne_spark.streaming import ensure_event_time
+
+        df = ensure_event_time(df)
+    with _T_MEMO_LOCK:
         _T_MEMO[key] = df
+        if len(_T_MEMO) > _T_MEMO_MAX:
+            _T_MEMO.popitem(last=False)
     return df
 
 

@@ -29,7 +29,10 @@ def get_session(
       - maxPartitionBytes 128 MB keeps scan tasks ~row-group sized.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS")
+            or len(os.sched_getaffinity(0))
+        )
     builder = (
         SparkSession.builder.appName(app)
         .config("spark.sql.adaptive.enabled", "true")
@@ -74,6 +77,12 @@ def get_session(
         # tests assert on the full filter list
         .config("spark.sql.maxMetadataStringLength", "2000")
         .config("spark.ui.enabled", "false")
+        # PySpark's per-call call-site capture adds ~5 Py4J round trips
+        # to every Column/function call (hundreds per DSL compile). With
+        # it off, error messages no longer name the Python call site;
+        # extra_conf can turn it back on. PySpark reads the value once
+        # per process, so it is set here, at creation.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # caller overrides (e.g. bench enables the UI for its REST metrics)
     for k, v in (extra_conf or {}).items():

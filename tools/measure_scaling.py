@@ -1,6 +1,7 @@
 """Measure wall seconds for a set of registry keys at one SF — the
-docs/SCALING.md methodology (local[32], one warm session, caches
-released between queries, noop sink).
+docs/SCALING.md methodology (local[$SPARK_GRAFT_CPUS], by default the
+CPUs this process may run on; one warm session, caches released
+between queries, noop sink).
 
 Round-7 fix (VERDICT r6 ask #6): TWO untimed warm-up queries run
 before the loop (parquet footers, regexp/md5 codegen, shuffle paths),
@@ -27,9 +28,7 @@ def main() -> None:
     from faconne_spark.queries import all_queries
     from faconne_spark.session import get_session
 
-    spark = get_session(
-        "faconne_scaling", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_session("faconne_scaling")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
     # untimed warm-up (ask #6): session JIT + parquet footers + codegen

@@ -28,8 +28,8 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--explain", action="store_true")
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="local[N] cores (default: get_session's)")
     args = ap.parse_args()
 
     from faconne_spark.session import get_session
