@@ -3,6 +3,7 @@ cache release, and the multimodal real-codec swap-in seam."""
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -302,7 +303,15 @@ def test_stateful_timeout_configured(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # A processing-time timeout makes the engine run a no-data batch on
+    # every trigger, so the query neither terminates on its own nor
+    # reports "no new data": wait (at most 120 s, as before) for the
+    # progress report of the batch that read the input.
+    deadline = time.monotonic() + 120
+    while time.monotonic() < deadline and not any(
+        p.numInputRows for p in q.recentProgress
+    ):
+        time.sleep(0.2)
     q.stop()
     rows = spark.sql("SELECT * FROM totals_timeout").collect()
     assert len(rows) == events.select("user_id").distinct().count()
