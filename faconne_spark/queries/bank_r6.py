@@ -1,9 +1,9 @@
 """Round-6 gate-key bank: query/oracle pairs built and cross-engine
 tested THIS round but intentionally NOT registered — the round-5
 driver window is full (see queries/__init__.py).  Round 6 wires these
-into curation.py's QUERIES/ORACLES and the top of the new `_FIRST`
-block; tests/test_bank_r6.py already runs each pair driver-style
-against DuckDB, so registration is a move, not new work."""
+into curation.py's QUERIES/ORACLES; tests/test_bank_r6.py already
+runs each pair driver-style against DuckDB, so registration is a move,
+not new work."""
 
 from __future__ import annotations
 

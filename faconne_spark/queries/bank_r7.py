@@ -2,11 +2,10 @@
 tested in round 6 but NOT registered — the r6 driver window closed at
 45 changed/new keys and these would have landed past it.  Round 7
 wires them into the registry by adding this module to
-queries/__init__._merged's module list and front-loading the keys in
-the rebuilt `_FIRST`; tests/test_bank_r7.py already runs each pair
-driver-style against DuckDB at three SFs, so registration is a move,
-not new work (the bank_r6 precedent: its 20 pairs converted to 20
-green CORRECTNESS_r06 rows for free)."""
+queries/__init__._MODULES; tests/test_bank_r7.py already runs each
+pair driver-style against DuckDB at three SFs, so registration is a
+move, not new work (the bank_r6 precedent: its 20 pairs converted to
+20 green CORRECTNESS_r06 rows for free)."""
 
 from __future__ import annotations
 

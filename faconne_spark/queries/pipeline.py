@@ -2333,8 +2333,8 @@ def training_manifest(spark, sf, cascade=None):
     ``cascade``: optionally a precomputed (doc_id, stage) relation —
     production runs the cascade once, snapshots its verdict, and builds
     the manifest FROM the snapshot rather than recomputing the whole
-    dedup family (bench.py does exactly that; rows are identical either
-    way, asserted in tests/test_hardening.py)."""
+    dedup family (rows are identical either way, asserted in
+    tests/test_hardening.py)."""
     if cascade is None:
         cascade = dedup_cascade(spark, sf)
     gate = quality_gate(spark, sf).select(

@@ -266,8 +266,11 @@ def events_user_entropy_quantiles(spark, sf):
         .agg(F.count("*").alias("n"))
     )
     nu = cnt.groupBy("user_id").agg(F.sum("n").alias("n_u"))
+    # explicit build side: unhinted, AQE re-plans this join from
+    # whichever of the two cnt-derived stages finishes first, so the
+    # cached plan broadcast either side from run to run
     per_user = track_persist(
-        cnt.join(nu, "user_id")
+        cnt.join(F.broadcast(nu), "user_id")
         .withColumn(
             "__l",
             F.expr(

@@ -68,9 +68,9 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet carries TIMESTAMP(NANOS). On Spark <= 4.0 this
         # conf makes it read as bigint nanos; Spark 4.1+ ignores it and
-        # reads TIMESTAMP(NANOS) as timestamp_ntz (µs). load_tables /
-        # streaming.ensure_event_time normalize either shape to a plain
-        # µs TIMESTAMP so watermarks and DuckDB oracles agree.
+        # reads TIMESTAMP(NANOS) as timestamp_ntz (µs). queries.T (via
+        # streaming.ensure_event_time) normalizes either shape to a
+        # plain µs TIMESTAMP so watermarks and DuckDB oracles agree.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # default 100 truncates PushedFilters in explain(); plan-shape
@@ -92,24 +92,6 @@ def get_session(
     return builder.getOrCreate()
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load every parquet table in ``sf_dir`` and register temp views."""
-    tables = {}
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            if name == "events":
-                df = _fix_nanos(df)
-            df.createOrReplaceTempView(name)
-            tables[name] = df
-    return tables
-
-
 def spread(df, min_parts: int | None = None):
     """Ensure enough input partitions for CPU-bound per-row work
     (hashing, shingling, vector math).
@@ -126,17 +108,6 @@ def spread(df, min_parts: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def _fix_nanos(df):
-    """events.ts is TIMESTAMP(NANOS) in parquet. Depending on runtime it
-    arrives as bigint nanos (Spark ≤ 4.0 + nanosAsLong) or as
-    timestamp_ntz (Spark 4.1+); normalize either to a plain µs
-    TIMESTAMP (DuckDB's native resolution, so oracles agree, and
-    ``withWatermark`` accepts it)."""
-    from faconne_spark.streaming import ensure_event_time
-
-    return ensure_event_time(df)
 
 
 def plan_report(df) -> dict:

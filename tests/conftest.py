@@ -1,6 +1,7 @@
 import os
 import sys
 
+import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -13,9 +14,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 if "FACONNE_TWS_DEV_PROTOBUF" not in os.environ:
     os.environ["FACONNE_TWS_DEV_PROTOBUF"] = "1"
 
-from faconne_spark.session import get_session, load_tables  # noqa: E402
+from faconne_spark.queries import T  # noqa: E402
+from faconne_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("FACONNE_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
+
+
+def _present(sf_dir):
+    return [t for t in TABLES if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))]
 
 
 @pytest.fixture(scope="session")
@@ -27,7 +38,17 @@ def spark():
 
 @pytest.fixture(scope="session")
 def tables(spark):
-    return load_tables(spark, SF_DIR)
+    return {t: T(spark, SF_DIR, t) for t in _present(SF_DIR)}
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    """DuckDB over the same parquet files, one view per table."""
+    con = duckdb.connect()
+    for t in _present(sf_dir):
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 @pytest.fixture(scope="session")

@@ -6,51 +6,16 @@ already-proven pairs."""
 import os
 import sys
 
-import duckdb
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from faconne_spark.queries.bank_r6 import BANK_ORACLES, BANK_QUERIES
-
-TABLES = [
-    "events", "orders", "customer", "lineitem", "part", "documents",
-    "embeddings",
-]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
-
-
-def _canon(df: pd.DataFrame) -> str:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-    cols = []
-    for c in df.columns:
-        col = df[c]
-        if col.dtype.kind == "f":
-            col = col.round(9)
-        elif col.dtype.kind in "iu":
-            col = col.astype("int64")
-        elif col.dtype == object:
-            col = col.astype(str)
-        cols.append(col.astype(str))
-    return pd.concat(cols, axis=1).to_csv(index=False)
+from faconne_spark.queries.bank_r6 import BANK_ORACLES, BANK_QUERIES  # noqa: E402
+from oracle_pairs import assert_pair_matches  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(BANK_QUERIES))
 def test_bank_pair_matches_oracle(spark, sf_dir, duck, name):
     got = BANK_QUERIES[name](spark, sf_dir).toPandas()
     want = duck.sql(BANK_ORACLES[name]).df()
-    assert len(got) == len(want), name
-    assert sorted(got.columns) == sorted(want.columns), name
-    assert _canon(got) == _canon(want), name
+    assert_pair_matches(name, got, want)

@@ -6,45 +6,12 @@ the test SF — so round-9 registration inherits already-proven pairs
 import os
 import sys
 
-import duckdb
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from faconne_spark.queries.bank_r9 import BANK_ORACLES, BANK_QUERIES
-
-TABLES = [
-    "events", "orders", "customer", "lineitem", "part", "documents",
-    "embeddings", "supplier", "nation",
-]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
-
-
-def _canon(df: pd.DataFrame) -> str:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-    cols = []
-    for c in df.columns:
-        col = df[c]
-        if col.dtype.kind == "f":
-            col = col.round(9)
-        elif col.dtype.kind in "iu":
-            col = col.astype("int64")
-        elif col.dtype == object:
-            col = col.astype(str)
-        cols.append(col.astype(str))
-    return pd.concat(cols, axis=1).to_csv(index=False)
+from faconne_spark.queries.bank_r9 import BANK_ORACLES, BANK_QUERIES  # noqa: E402
+from oracle_pairs import assert_pair_matches, rows_by_partition_count  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(BANK_QUERIES))
@@ -53,9 +20,7 @@ def test_bank_pair_matches_oracle(spark, sf_dir, duck, name):
     want = duck.sql(BANK_ORACLES[name]).df()
     got.columns = [c.lower() for c in got.columns]
     want.columns = [c.lower() for c in want.columns]
-    assert len(got) == len(want), name
-    assert sorted(got.columns) == sorted(want.columns), name
-    assert _canon(got) == _canon(want), name
+    assert_pair_matches(name, got, want)
 
 
 def test_bank_r9_partitioning_invariant(spark, sf_dir):
@@ -64,21 +29,6 @@ def test_bank_r9_partitioning_invariant(spark, sf_dir):
     per-customer trend BIGINTs, the KS cross-multiplied integer max,
     and the distinct-count tie terms are the partition-sensitive
     shapes)."""
-    from faconne_spark.operators.dedup import release_caches
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    results = {}
-    try:
-        for n in ("5", "32"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
-            for k in sorted(BANK_QUERIES):
-                rows = sorted(
-                    tuple(map(str, r))
-                    for r in BANK_QUERIES[k](spark, sf_dir).collect()
-                )
-                results.setdefault(k, []).append(rows)
-                release_caches()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    results = rows_by_partition_count(spark, sf_dir, BANK_QUERIES)
     for k, (a, b) in results.items():
         assert a == b and a, f"{k} differs across partitioning"

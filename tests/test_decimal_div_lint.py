@@ -94,7 +94,6 @@ def _engine_py_files():
         for f in sorted(files):
             if f.endswith(".py"):
                 yield os.path.join(root, f)
-    yield os.path.join(REPO, "bench.py")
     yield os.path.join(REPO, "__spark_entry__.py")
 
 
@@ -114,21 +113,13 @@ def test_no_decimal_literal_division_in_engine_strings():
 
 
 def test_no_decimal_literal_division_in_oracles():
-    """Registered oracles AND staged bank oracles — the runtime dict
-    values also close the f-string blind spot of the ast scan (an
-    interpolated fragment like '{j}/20.0' joins into a literal/literal
-    division only at runtime)."""
-    import importlib
-
+    """Registered oracles — the runtime dict values also close the
+    f-string blind spot of the ast scan (an interpolated fragment like
+    '{j}/20.0' joins into a literal/literal division only at runtime)."""
     from faconne_spark.queries import all_oracles
 
-    oracles = dict(all_oracles())
-    for bank in ("bank_r12", "bank_r13"):
-        mod = importlib.import_module(f"faconne_spark.queries.{bank}")
-        for k, v in mod.BANK_ORACLES.items():
-            oracles[f"{bank}:{k}"] = v
     bad = []
-    for key, sql in oracles.items():
+    for key, sql in all_oracles().items():
         if not isinstance(sql, str):
             continue
         for hit in _literal_literal_hits(sql):
@@ -165,30 +156,18 @@ def test_lint_catches_the_planted_gumbel_trap():
 # integer-assumed — perimeter documented in the module docstring).
 
 # (oracle-key, operand-snippet) -> audit rationale for sites the
-# prover cannot reach.  EMPTY today: the whole registry + staged bank
+# prover cannot reach.  EMPTY today: the whole registry
 # proves clean.  A new unprovable site must be rewritten cast-first or
 # audited into this dict with its type derivation.
 WAIVERS_INTDIV: dict = {}
 
 
-def _all_oracle_pairs():
-    import importlib
-
-    from faconne_spark.queries import all_oracles
-
-    oracles = dict(all_oracles())
-    for bank in ("bank_r12", "bank_r13"):
-        mod = importlib.import_module(f"faconne_spark.queries.{bank}")
-        for k, v in mod.BANK_ORACLES.items():
-            oracles.setdefault(f"{bank}:{k}", v)
-    return oracles
-
-
 def test_no_unprovable_intdiv_in_oracles():
+    from faconne_spark.queries import all_oracles
     from tools.intdiv_lint import scan_sql
 
     bad = []
-    for key, sql in sorted(_all_oracle_pairs().items()):
+    for key, sql in sorted(all_oracles().items()):
         if not isinstance(sql, str):
             continue
         for side, op in scan_sql(sql):

@@ -7,52 +7,17 @@ mirrors that comparison for every oracled query."""
 import os
 import sys
 
-import duckdb
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
+import __spark_entry__ as entry_mod  # noqa: E402
+from oracle_pairs import canon  # noqa: E402
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("FACONNE_DRIVER_CANON"),
     reason="driver-canon pre-flight is opt-in (duplicates the oracle gate)",
 )
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
-
-
-def _canon(df: pd.DataFrame) -> str:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-    cols = []
-    for c in df.columns:
-        col = df[c]
-        if col.dtype.kind == "f":
-            col = col.round(9)
-        elif col.dtype.kind in "iu":
-            col = col.astype("int64")
-        elif col.dtype == object:
-            col = col.astype(str)
-        cols.append(col.astype(str))
-    return pd.concat(cols, axis=1).to_csv(index=False)
-
 
 ORACLES = entry_mod.oracle_sql()
 
@@ -66,4 +31,4 @@ def test_driver_style_canon(name, spark, duck, sf_dir):
     release_caches()
     sdf.columns = [c.lower() for c in sdf.columns]
     ddf.columns = [c.lower() for c in ddf.columns]
-    assert _canon(sdf) == _canon(ddf)
+    assert canon(sdf) == canon(ddf)

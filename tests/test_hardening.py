@@ -480,17 +480,6 @@ def test_survey_registry_consistency():
             survey,
         )
     )
-    # SURVEY §7 may cite next-round bank keys (built + cross-engine
-    # proven but deliberately unregistered while the driver window is
-    # full) — those are known, not drift.
-    from faconne_spark.queries.bank_r8 import BANK_QUERIES
-    from faconne_spark.queries.bank_r9 import BANK_QUERIES as BANK_R9
-    from faconne_spark.queries.bank_r10 import BANK_QUERIES as BANK_R10
-    from faconne_spark.queries.bank_r11 import BANK_QUERIES as BANK_R11
-    from faconne_spark.queries.bank_r12 import BANK_QUERIES as BANK_R12
-    from faconne_spark.queries.bank_r13 import BANK_QUERIES as BANK_R13
-    from faconne_spark.queries.staged_r9 import BANK_QUERIES as STAGED_R9
-
     # operator/function names that match key-shaped regex alternatives
     # but are library primitives, not registry keys (cited in SURVEY
     # scale notes by their real names)
@@ -498,9 +487,7 @@ def test_survey_registry_consistency():
         "sample_panel", "sample_panel_sql", "quality_score",
         "sample_frames_real",
     }
-    known = (qs | set(BANK_QUERIES) | set(BANK_R9) | set(STAGED_R9)
-             | set(BANK_R10) | set(BANK_R11) | set(BANK_R12) | set(BANK_R13)
-             | known_operators)
+    known = qs | known_operators
     cited_keys = {k for k in cited if k in qs or not k.startswith(("text_", "events_"))}
     missing_in_registry = sorted(k for k in cited_keys if k not in known)
     missing_in_survey = sorted(k for k in qs if k not in cited)
@@ -759,7 +746,7 @@ def test_write_zordered_rejects_empty_input(spark, tmp_path):
 
 
 def test_training_manifest_from_cascade_snapshot(spark, sf_dir, tmp_path):
-    """bench.py's double-pay shave (VERDICT r4 ask #6): feeding
+    """The cascade double-pay shave (VERDICT r4 ask #6): feeding
     training_manifest a parquet SNAPSHOT of the cascade verdict must
     produce rows identical to recomputing the cascade inline."""
     from faconne_spark.operators.dedup import release_caches
@@ -1406,17 +1393,3 @@ def test_events_value_nonnegative_contract(sf_dir):
         f" read_parquet('{sf_dir}/events.parquet')"
     ).fetchone()[0]
     assert lo >= 0
-
-
-def test_bench_reps_comparability_refusal():
-    """Judge r11 ask #7: a reps=1 bench run must label itself
-    incomparable in the emitted JSON (first-rep inflation reaches 4x
-    on stamp-identical plans; the min-of-N instrument needs N >= 2)."""
-    import bench
-
-    ok = bench.bench_comparability(2)
-    assert ok == {"cross_round_comparable": True}
-    assert bench.bench_comparability(5) == {"cross_round_comparable": True}
-    bad = bench.bench_comparability(1)
-    assert bad["cross_round_comparable"] is False
-    assert "reps=1" in bad["incomparable_reason"]

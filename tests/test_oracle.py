@@ -3,27 +3,10 @@ through Spark AND its oracle_sql() through DuckDB on the same parquet;
 compare row count, column names, and an order-insensitive value hash."""
 
 import math
-import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
 
 
 def canon(value):
@@ -113,6 +96,16 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         raise AssertionError(
             f"{name}: value mismatch\n only-spark: {diff_s}\n only-duck:  {diff_d}"
         )
+
+
+def test_registry_rejects_duplicate_keys(monkeypatch):
+    """Two registry modules defining one key is an error, not a silent
+    override by the later module."""
+    from faconne_spark import queries
+
+    monkeypatch.setattr(queries, "_MODULES", ("tpch", "tpch"))
+    with pytest.raises(ValueError, match="tpch_q1_pricing"):
+        queries.all_queries()
 
 
 def test_entry_smoke(spark):

@@ -8,6 +8,7 @@ import math
 import os
 
 import pytest
+from oracle_pairs import canon, rows_by_partition_count
 
 WAVE_KEYS = [
     "events_daily_acf_ljungbox",
@@ -23,23 +24,6 @@ WAVE_KEYS = [
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
-
-def _canon(pdf):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    pdf = pdf.sort_values(
-        by=list(pdf.columns), kind="mergesort"
-    ).reset_index(drop=True)
-    cols = []
-    for c in pdf.columns:
-        col = pdf[c]
-        if col.dtype.kind == "f":
-            col = col.round(9)
-        elif col.dtype.kind in "iu":
-            col = col.astype("int64")
-        cols.append(col.astype(str))
-    import pandas as pd
-
-    return pd.concat(cols, axis=1).to_csv(index=False)
 
 
 @pytest.mark.parametrize("key", WAVE_KEYS)
@@ -61,28 +45,14 @@ def test_wave_key_matches_oracle(key, sfd, spark):
         )
     duck_pdf = con.execute(all_oracles()[key]).df()
     assert len(spark_pdf) > 0, f"{key} vacuous at {sfd}"
-    assert _canon(spark_pdf) == _canon(duck_pdf), f"{key} @ {sfd}"
+    assert canon(spark_pdf) == canon(duck_pdf), f"{key} @ {sfd}"
 
 
 def test_wave_partitioning_invariance(spark, sf_dir):
-    from faconne_spark.operators.dedup import release_caches
     from faconne_spark.queries import all_queries
 
     qs = all_queries()
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    results = {}
-    try:
-        for n in ("5", "32"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
-            for k in WAVE_KEYS:
-                rows = sorted(
-                    tuple(map(str, r))
-                    for r in qs[k](spark, sf_dir).collect()
-                )
-                results.setdefault(k, []).append(rows)
-                release_caches()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    results = rows_by_partition_count(spark, sf_dir, {k: qs[k] for k in WAVE_KEYS})
     for k, (a, b) in results.items():
         assert a == b, f"{k} differs across partitioning"
 

@@ -1,4 +1,4 @@
-"""Regenerate docs/QUERIES.md — the gate-order registry index.
+"""Regenerate docs/QUERIES.md — the registry index, in registry order.
 
 Each row: position, key, oracle kind, and a one-line summary resolved
 from the query wrapper's docstring (falling back to the first operator
@@ -72,8 +72,8 @@ def main() -> None:
         "",
         f"{len(qs)} queries, {oracle_note} "
         "(`__spark_entry__.oracle_sql()`) recomputing the same algorithm "
-        "on the same parquet. Listed in gate order (new/changed-this-round "
-        "keys first). Full design notes per key: SURVEY.md §2.",
+        "on the same parquet. Listed in registry order. Full design notes "
+        "per key: SURVEY.md §2.",
         "",
         "| # | key | oracle | summary |",
         "|---|---|---|---|",

@@ -6,8 +6,8 @@ Usage:
 Times each named registry query with the noop sink (min over reps,
 per-rep walls printed), in ONE session, with job descriptions set so
 the Spark UI (if enabled) attributes stages.  Prints the formatted
-plan on request (--explain).  This is a measurement tool only — the
-bench contract lives in bench.py, unchanged.
+plan on request (--explain).  This is a measurement tool only; the
+project's benchmark is perfbench/.
 """
 
 from __future__ import annotations
