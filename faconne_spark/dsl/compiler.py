@@ -19,13 +19,9 @@ from faconne_spark.dsl.domain import Binder
 from faconne_spark.dsl.range_ import build_range
 from faconne_spark.errors import FaconneError
 
-# DataFrame -> Shape for collect_nested (keyed weakly by plan id)
-_SHAPES: dict = {}
-
 
 def _remember_shape(df: DataFrame, shape) -> DataFrame:
-    _SHAPES[id(df._jdf) if hasattr(df, "_jdf") else id(df)] = shape
-    df._fac_shape = shape  # primary channel; dict is a fallback
+    df._fac_shape = shape  # what collect_nested reads back (shape_of)
     return df
 
 

@@ -11,6 +11,14 @@ Every literal takes one path: a Spark schema inferred here, then a
 It plans as ``LocalTableScan`` (below the 48 MB default of
 ``spark.sql.execution.arrow.localRelationThreshold``), so actions on it
 start no Python workers; no session conf is read or changed.
+
+The relation is coalesced to one partition. ``coalesce(1)`` does not
+shuffle and reports ``SinglePartition``, which satisfies every
+clustered distribution, so the binder's explodes, the range's
+aggregates, ``distinct`` and the deep-merge joins above a literal plan
+no shuffle exchange (a cross join of top-level struct ranges still
+broadcasts): data that fits on the driver runs as one job of one task.
+DataFrame inputs keep their distributed plans.
 """
 
 from __future__ import annotations
@@ -46,6 +54,10 @@ def to_df(
     DataFrame needs the shape in the schema up front.
 
     An explicit ``schema`` (a ``StructType`` of the rows) skips inference.
+
+    The result is one partition (``coalesce(1)``, no shuffle), so a
+    transform over it plans no exchange; ``repartition`` it to get the
+    distributed plan of a large input.
     """
     spark = spark or SparkSession.getActiveSession() or get_session()
     if (
@@ -72,7 +84,7 @@ def to_df(
     table = pa.Table.from_pylist(
         [_to_arrow(r, schema) for r in rows], schema=to_arrow_schema(schema)
     )
-    return spark.createDataFrame(table, schema=schema)
+    return spark.createDataFrame(table, schema=schema).coalesce(1)
 
 
 _SCALAR_TYPES = [  # bool before int, datetime before date: subclasses

@@ -1,7 +1,6 @@
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -16,6 +15,7 @@ if "FACONNE_TWS_DEV_PROTOBUF" not in os.environ:
 
 from faconne_spark.queries import T  # noqa: E402
 from faconne_spark.session import get_session  # noqa: E402
+from oracle_pairs import duck_views  # noqa: E402
 
 SF_DIR = os.environ.get("FACONNE_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -41,14 +41,10 @@ def tables(spark):
     return {t: T(spark, SF_DIR, t) for t in _present(SF_DIR)}
 
 
-@pytest.fixture(scope="module")
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     """DuckDB over the same parquet files, one view per table."""
-    con = duckdb.connect()
-    for t in _present(sf_dir):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
+    return duck_views(sf_dir)
 
 
 @pytest.fixture(scope="session")

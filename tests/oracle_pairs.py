@@ -1,8 +1,27 @@
-"""Helpers shared by the per-module oracle-pair tests: the driver-style
-compare (pandas sort + canon text) and the shuffle-partition
-invariance run."""
+"""Helpers shared by the per-module oracle-pair tests: one DuckDB
+connection per scale-factor directory, the driver-style compare (pandas
+sort + canon text) and the shuffle-partition invariance run."""
 
+import functools
+import os
+
+import duckdb
 import pandas as pd
+
+
+@functools.lru_cache(maxsize=None)
+def duck_views(sf_dir: str):
+    """DuckDB over the parquet tables of ``sf_dir``, one view per table.
+    Cached: every test over one directory shares one connection."""
+    con = duckdb.connect()
+    for name in sorted(os.listdir(sf_dir)):
+        if name.endswith(".parquet"):
+            path = os.path.join(sf_dir, name)
+            con.sql(
+                f"CREATE VIEW {name[:-len('.parquet')]} AS"
+                f" SELECT * FROM read_parquet('{path}')"
+            )
+    return con
 
 
 def canon(df: pd.DataFrame) -> str:

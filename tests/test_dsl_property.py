@@ -2,18 +2,24 @@
 domain — including empty branches — transformed by the Spark engine and
 checked against hand-written Python oracles, mirroring the reference's
 ``gen-structure-from-domain`` random-extension strategy
-(test/core.clj:7-32)."""
+(test/core.clj:7-32).
+
+Each DSL property runs twice: on the literal itself, which plans as one
+partition with no exchange, and on the same rows repartitioned to three
+partitions, which keeps the shuffle plans (hash-partitioned grouping,
+full-outer deep-merge joins) checked against the oracle too."""
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from faconne_spark import Agg, Keys, SetOf, V, collect_nested, transform
+from faconne_spark import Agg, Keys, SetOf, V, collect_nested, to_df, transform
 
 
-def t(spark, data, domain, range_, where=None):
-    return collect_nested(
-        transform(data, domain, range_, where=where, spark=spark)
-    )
+def check(spark, expected, data, domain, range_, where=None):
+    literal = to_df(data, spark=spark, domain=domain)
+    for label, df in (("literal", literal), ("3 partitions", literal.repartition(3))):
+        got = collect_nested(transform(df, domain, range_, where=where))
+        assert got == expected, label
 
 
 names = st.text(
@@ -42,17 +48,16 @@ nested_2level = st.dictionaries(
 @PROP
 @given(data=nested_2level)
 def test_unnest_to_set_matches_oracle(spark, data):
-    got = t(
-        spark, data,
-        {V.store: {V.aisle: [V.product]}},
-        {V.store: SetOf(V.product)},
-    )
     expected = {}
     for store, aisles in data.items():
         for products in aisles.values():
             for p in products:
                 expected.setdefault(store, set()).add(p)
-    assert got == expected
+    check(
+        spark, expected, data,
+        {V.store: {V.aisle: [V.product]}},
+        {V.store: SetOf(V.product)},
+    )
 
 
 # ---- rows → grouped sum ----------------------------------------------
@@ -67,11 +72,10 @@ rows = st.lists(
 @PROP
 @given(data=rows)
 def test_group_sum_matches_oracle(spark, data):
-    got = t(spark, data, [Keys("k", "v")], {V.k: Agg("sum(v)")})
     expected = {}
     for r in data:
         expected[r["k"]] = expected.get(r["k"], 0) + r["v"]
-    assert got == expected
+    check(spark, expected, data, [Keys("k", "v")], {V.k: Agg("sum(v)")})
 
 
 # ---- inversion {k [x]} → {x #{k}} ------------------------------------
@@ -84,12 +88,11 @@ inv_input = st.dictionaries(
 @PROP
 @given(data=inv_input)
 def test_inversion_matches_oracle(spark, data):
-    got = t(spark, data, {V.k: [V.x]}, {V.x: SetOf(V.k)})
     expected = {}
     for k, xs in data.items():
         for x in xs:
             expected.setdefault(x, set()).add(k)
-    assert got == expected
+    check(spark, expected, data, {V.k: [V.x]}, {V.x: SetOf(V.k)})
 
 
 # ---- where-filter ----------------------------------------------------
@@ -97,15 +100,14 @@ def test_inversion_matches_oracle(spark, data):
 @PROP
 @given(data=rows)
 def test_where_filter_matches_oracle(spark, data):
-    got = t(
-        spark, data, [Keys("k", "v")], {V.k: SetOf(V.v)},
-        where=["v >= 0"],
-    )
     expected = {}
     for r in data:
         if r["v"] >= 0:
             expected.setdefault(r["k"], set()).add(r["v"])
-    assert got == expected
+    check(
+        spark, expected, data, [Keys("k", "v")], {V.k: SetOf(V.v)},
+        where=["v >= 0"],
+    )
 
 
 # ---- n-at-a-time vector partitioning ---------------------------------
@@ -118,9 +120,8 @@ even_ints = st.lists(
 @PROP
 @given(data=even_ints)
 def test_chunk_pairs_matches_oracle(spark, data):
-    got = t(spark, data, [V.a, V.b], ["a + b AS s"])
     expected = [data[i] + data[i + 1] for i in range(0, len(data), 2)]
-    assert got == expected
+    check(spark, expected, data, [V.a, V.b], ["a + b AS s"])
 
 
 # ---- multi-binding map (all entry pairs) -----------------------------
@@ -133,21 +134,18 @@ kv_map = st.dictionaries(
 @PROP
 @given(data=kv_map, target=st.integers(0, 12))
 def test_entry_pairs_matches_oracle(spark, data, target):
-    from faconne_spark import SetOf
-
-    got = t(
-        spark, data,
-        {V.k: V.v, V.k2: V.v2},
-        SetOf(SetOf([V.k, V.k2])),
-        where=["k != k2", f"v + v2 = {target}"],
-    )
     expected = {
         tuple(sorted((k1, k2)))
         for k1, v1 in data.items()
         for k2, v2 in data.items()
         if k1 != k2 and v1 + v2 == target
     }
-    assert got == expected
+    check(
+        spark, expected, data,
+        {V.k: V.v, V.k2: V.v2},
+        SetOf(SetOf([V.k, V.k2])),
+        where=["k != k2", f"v + v2 = {target}"],
+    )
 
 
 # ---- Agg reducers ----------------------------------------------------
@@ -155,16 +153,15 @@ def test_entry_pairs_matches_oracle(spark, data, target):
 @PROP
 @given(data=rows)
 def test_agg_max_count_matches_oracle(spark, data):
-    got = t(
-        spark, data, [Keys("k", "v")],
-        {V.k: {"mx": Agg("max(v)"), "n": Agg("count(v)")}},
-    )
     expected = {}
     for r in data:
         e = expected.setdefault(r["k"], {"mx": r["v"], "n": 0})
         e["mx"] = max(e["mx"], r["v"])
         e["n"] += 1
-    assert got == expected
+    check(
+        spark, expected, data, [Keys("k", "v")],
+        {V.k: {"mx": Agg("max(v)"), "n": Agg("count(v)")}},
+    )
 
 
 # ---- corpus-statistics operators vs Python oracles --------------------

@@ -1,7 +1,7 @@
 """Python literals reach Spark on one path: a schema inferred in
-``pyobj``, a ``pyarrow.Table`` and a ``LocalRelation``. These tests pin
-the types that path gives, its plan shape, and that it leaves the
-session conf alone."""
+``pyobj``, a ``pyarrow.Table`` and a ``LocalRelation`` coalesced to one
+partition. These tests pin the types that path gives, its plan shape
+(no exchange), and that it leaves the session conf alone."""
 
 import datetime
 import decimal
@@ -9,7 +9,8 @@ import decimal
 import pytest
 from pyspark.sql import types as T
 
-from faconne_spark import SetOf, V, collect_nested, to_df, transform
+from faconne_spark import Agg, SetOf, V, collect_nested, to_df, transform
+from faconne_spark.session import plan_report
 
 
 def _plan(df) -> str:
@@ -85,16 +86,51 @@ def test_record_schema_matrix(spark, rows, schema):
     assert len(df.collect()) == len(rows)
 
 
-def test_literal_ops_plan_as_local_table_scan(spark):
-    # every op of the benchmark's literal workload: a LocalTableScan
-    # leaf, no Python RDD scan, and the workload's expected result
+def _literal_ops() -> dict:
+    """The benchmark's literal ops, plus a struct range that deep-merges a
+    deeper-grouped branch back through a full-outer join, and the two
+    empty literals."""
     from perfbench.workloads import literal_cases
 
-    for op, (data, domain, range_, expected) in literal_cases(7).items():
-        out = transform(data, domain, range_, spark=spark)
+    cases = literal_cases(7)
+    stores, store_dom = cases["store_sets"][:2]
+    cases["store_profile"] = (
+        stores,
+        store_dom,
+        {V.store: {"n": Agg("count(product)"),
+                   "by_aisle": {V.aisle: SetOf(V.product)}}},
+        {s: {"n": sum(map(len, aisles.values())),
+             "by_aisle": {a: set(ps) for a, ps in aisles.items()}}
+         for s, aisles in stores.items()},
+    )
+    cases["empty_map"] = ({}, {V.k: V.v}, {V.v: V.k}, {})
+    cases["empty_list"] = ([], [V.x], SetOf(V.x), set())
+    return cases
+
+
+def test_literal_ops_plan_as_local_table_scan(spark):
+    # a literal is one partition, so nothing above its LocalTableScan
+    # leaf needs an exchange; no Python RDD scan, and the expected result
+    for op, (data, domain, range_, expected) in _literal_ops().items():
+        df = to_df(data, spark=spark, domain=domain)
+        assert df.rdd.getNumPartitions() == 1, op
+        out = transform(df, domain, range_)
         plan = _plan(out)
         assert "LocalTableScan" in plan, op
         assert "ExistingRDD" not in plan, op
+        assert plan_report(out)["n_exchanges"] == 0, op
+        assert collect_nested(out) == expected, op
+
+
+def test_multi_partition_literal_ops_keep_their_exchanges(spark):
+    # the same rows over three partitions still plan the shuffles
+    # (grouping, distinct, full-outer deep merge) and give the same result
+    ops = _literal_ops()
+    del ops["empty_map"], ops["empty_list"]
+    for op, (data, domain, range_, expected) in ops.items():
+        df = to_df(data, spark=spark, domain=domain).repartition(3)
+        out = transform(df, domain, range_)
+        assert plan_report(out)["n_exchanges"] > 0, op
         assert collect_nested(out) == expected, op
 
 

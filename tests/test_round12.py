@@ -5,10 +5,9 @@ of every statistic (the replay discipline that has caught one staging
 bug per round since r9)."""
 
 import math
-import os
 
 import pytest
-from oracle_pairs import canon, rows_by_partition_count
+from oracle_pairs import canon, duck_views, rows_by_partition_count
 
 WAVE_KEYS = [
     "mm_flac_stats",
@@ -35,21 +34,10 @@ SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 @pytest.mark.parametrize("key", WAVE_KEYS)
 @pytest.mark.parametrize("sfd", SF_DIRS)
 def test_wave_key_matches_oracle(key, sfd, spark):
-    import duckdb
-
     from faconne_spark.queries import all_oracles, all_queries
 
     spark_pdf = all_queries()[key](spark, sfd).toPandas()
-    con = duckdb.connect()
-    for t in (
-        "events", "orders", "customer", "lineitem", "part",
-        "documents", "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{os.path.join(sfd, t)}.parquet')"
-        )
-    duck_pdf = con.execute(all_oracles()[key]).df()
+    duck_pdf = duck_views(sfd).execute(all_oracles()[key]).df()
     assert len(spark_pdf) > 0, f"{key} vacuous at {sfd}"
     assert canon(spark_pdf) == canon(duck_pdf), f"{key} @ {sfd}"
 
